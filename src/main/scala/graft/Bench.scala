@@ -330,11 +330,14 @@ object Bench {
       "enrich_100k_resume" -> 1.156, "enrich_100k_durable_10chunks" -> 2.736)
     val probeRatios = probeRef.flatMap { case (k, ref) =>
       results.getOrElse(k, None).map(_ / ref) }
-    // the synthetic kernel's r15 pin on the reference host (see above):
-    // host-speed ratio at record time = synthetic_kernel_sec / this
-    val syntheticRef = 0.0 // 0.0 = unpinned; set from the r15 record
+    // the synthetic kernel's pin on the reference host (see above):
+    // host-speed ratio at record time = synthetic_kernel_sec / this. No
+    // pin exists yet, so the record says null rather than a number a
+    // reader could divide by
+    val syntheticRef: Option[Double] = None
+    val refJson = syntheticRef.map(r => f"$r%.3f").getOrElse("null")
     val synthJson = syntheticKernelSec
-      .map(s => f""","synthetic_kernel_sec":$s%.3f,"synthetic_ref_sec":$syntheticRef%.3f""")
+      .map(s => f""","synthetic_kernel_sec":$s%.3f,"synthetic_ref_sec":$refJson""")
       .getOrElse("")
     val calibration =
       if (probeRatios.isEmpty && syntheticKernelSec.isEmpty) "null"
@@ -348,22 +351,24 @@ object Bench {
       }
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"calibration":$calibration,"sf":"$sfDir"}"""
     println(line)
-    // Sidecar copies of the SAME line (r15): the result line is ~6 KB and
-    // consumers that keep only a bounded stdout tail truncate it — every
-    // BENCH_r*.json since round 1 carries "parsed": null. The stdout
-    // contract line stays exactly as before (first and only JSON line);
-    // the sidecars give any consumer the full machine-readable record,
-    // and the short bracket-prefixed summary below fits ANY tail without
-    // being mistakable for the contract line.
+    // Sidecar copies of the SAME line: the result line is ~6 KB and
+    // consumers that keep only a bounded stdout tail truncate it. The
+    // stdout contract line stays the first and only JSON line; the
+    // sidecars give any consumer the full machine-readable record, and
+    // the short bracket-prefixed summary below fits ANY tail without
+    // being mistakable for the contract line. The /tmp copy is named per
+    // process, so records of different sf dirs or of concurrent runs on
+    // one host do not overwrite each other.
+    val tmpSidecar = s"/tmp/graft_bench_${cpus}_${ProcessHandle.current().pid()}.json"
     Seq(java.nio.file.Paths.get("bench_results.json"),
-        java.nio.file.Paths.get(s"/tmp/graft_bench_$cpus.json")).foreach { p =>
+        java.nio.file.Paths.get(tmpSidecar)).foreach { p =>
       try java.nio.file.Files.write(p,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable =>
         System.err.println(s"[bench] sidecar write failed ($p): ${e.getMessage}") }
     }
     println(f"[bench] total=$total%.3f sec arms=${results.size} " +
-      f"failed=${failed.size} sidecar=bench_results.json,/tmp/graft_bench_$cpus.json")
+      f"failed=${failed.size} sidecar=bench_results.json,$tmpSidecar")
     spark.stop()
   }
 }

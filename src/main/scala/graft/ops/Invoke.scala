@@ -6,6 +6,7 @@ import scala.concurrent.duration.Duration
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.types._
 
 import graft.core.{ErrorPolicy, LlmSpec, ProcessingSpec, PromptSpec}
@@ -217,7 +218,8 @@ object ClientPool {
   * Output columns appended to the input row:
   *   result, error, skipped, _call_id, call_rows, tokens_in, tokens_out,
   *   cost (DECIMAL(38,18) — exact, per-call, duplicated across the call's
-  *   rows; aggregate with dropDuplicates(_call_id) first), latency_ms.
+  *   rows; aggregate with dropDuplicates(_call_id) first), latency_ms,
+  *   model, and `_attempt` when an attempt salt is given.
   */
 object Invoke {
 
@@ -237,12 +239,17 @@ object Invoke {
     StructField("model", StringType))
 
   /** df must contain `_row_index` (long) and `prompt` (string); all other
-    * columns pass through untouched.
+    * columns pass through untouched. With `attempt` set, every emitted row
+    * also carries it as a non-null `_attempt` long. The value travels in
+    * the task closure, not as a plan literal, so runs with different salts
+    * share their generated code.
     */
   def apply(df: DataFrame, client: LlmClient, prompt: PromptSpec,
-            llm: LlmSpec, proc: ProcessingSpec, runId: String): DataFrame = {
+            llm: LlmSpec, proc: ProcessingSpec, runId: String,
+            attempt: Option[Long] = None): DataFrame = {
     val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ appendedFields)
+    val outSchema = StructType(inSchema.fields ++ appendedFields ++
+      attempt.map(_ => StructField("_attempt", LongType, nullable = false)))
     val idxAt = inSchema.fieldIndex(RowIndex.ColName)
     val promptAt = inSchema.fieldIndex("prompt")
     val batchSize = prompt.batchSize
@@ -276,15 +283,31 @@ object Invoke {
         rows.map(r => (r.getLong(idxAt), r.getString(promptAt), r))
           .grouped(batchSize).map(_.toSeq)
 
+      /** The fields every row of one call shares, from `_call_id` on,
+        * built once per call (`resp` is null for a call that failed). */
+      def callFields(callId: Long, callRows: Int,
+                     resp: LlmResponse): Array[Any] = {
+        val f =
+          if (resp == null)
+            Array[Any](callId, callRows, 0L, 0L, java.math.BigDecimal.ZERO,
+              0.0, null)
+          else
+            Array[Any](callId, callRows, resp.tokensIn, resp.tokensOut,
+              resp.cost, resp.latencyMs, resp.model)
+        attempt.fold(f)(a => f :+ a)
+      }
+
       def emit(row: Row, result: String, error: String, skipped: Boolean,
-               callId: Long, callRows: Int, resp: LlmResponse): Row = {
-        val (tIn, tOut, cost, lat, served) =
-          if (resp == null) (0L, 0L, java.math.BigDecimal.ZERO, 0.0, null)
-          else (resp.tokensIn, resp.tokensOut, resp.cost, resp.latencyMs,
-            resp.model)
-        Row.fromSeq(row.toSeq ++ Seq(result, error, skipped, callId,
-          callRows, tIn, tOut, new java.math.BigDecimal(cost.toString), lat,
-          served))
+               call: Array[Any]): Row = {
+        val n = row.length
+        val out = new Array[Any](n + 3 + call.length)
+        var i = 0
+        while (i < n) { out(i) = row.get(i); i += 1 }
+        out(n) = result
+        out(n + 1) = error
+        out(n + 2) = skipped
+        System.arraycopy(call, 0, out, n + 3, call.length)
+        new GenericRow(out)
       }
 
       /** One in-flight call group plus the liveness heartbeat the dequeue
@@ -347,6 +370,24 @@ object Invoke {
         }
       }
 
+      /** A failed call's rows under the error policy: SKIP marks them
+        * skipped, USE_DEFAULT fills the default, anything else rethrows. */
+      def resolveFailed(group: Seq[(Long, String, Row)],
+                        e: Throwable): Seq[Row] = {
+        val call = callFields(group.head._1, group.size, null)
+        policy match {
+          case ErrorPolicy.Skip =>
+            group.map { case (_, _, row) =>
+              emit(row, null, e.getMessage, skipped = true, call)
+            }
+          case ErrorPolicy.UseDefault =>
+            group.map { case (_, _, row) =>
+              emit(row, default, e.getMessage, skipped = false, call)
+            }
+          case _ => throw e // Fail / Retry-exhausted
+        }
+      }
+
       def callOne(pending: PendingCall): Seq[Row] = {
         if (pending.abandonedByBackstop) return Seq.empty
         val group = pending.group
@@ -377,27 +418,15 @@ object Invoke {
           val byId: Map[Long, String] =
             if (single) Map(callId -> resp.text)
             else BatchCodec.decodeResults(resp.text).toMap
+          val call = callFields(callId, group.size, resp)
           group.map { case (idx, _, row) =>
             // ids absent from the reply pad to null → parser → null output
             // → auto-retry picks them up (reference:
             // batch_disaggregator_stage.py:158-163)
-            emit(row, byId.getOrElse(idx, null), null, skipped = false,
-              callId, group.size, resp)
+            emit(row, byId.getOrElse(idx, null), null, skipped = false, call)
           }
         } catch {
-          case e: Throwable => policy match {
-            case ErrorPolicy.Skip =>
-              group.map { case (_, _, row) =>
-                emit(row, null, e.getMessage, skipped = true, callId,
-                  group.size, null)
-              }
-            case ErrorPolicy.UseDefault =>
-              group.map { case (_, _, row) =>
-                emit(row, default, e.getMessage, skipped = false, callId,
-                  group.size, null)
-              }
-            case _ => throw e // Fail / Retry-exhausted
-          }
+          case e: Throwable => resolveFailed(group, e)
         }
       }
 
@@ -454,20 +483,7 @@ object Invoke {
                   else
                     s"all $poolSize pool threads wedged by abandoned " +
                       "calls; resolving queued call (dequeue backstop)")
-                val callId = p.group.head._1
-                return policy match {
-                  case ErrorPolicy.Skip =>
-                    p.group.map { case (_, _, row) =>
-                      emit(row, null, err.getMessage, skipped = true,
-                        callId, p.group.size, null)
-                    }
-                  case ErrorPolicy.UseDefault =>
-                    p.group.map { case (_, _, row) =>
-                      emit(row, default, err.getMessage, skipped = false,
-                        callId, p.group.size, null)
-                    }
-                  case _ => throw err
-                }
+                return resolveFailed(p.group, err)
               }
           }
         }

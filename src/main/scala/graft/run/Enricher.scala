@@ -2,8 +2,7 @@ package graft.run
 
 import java.math.{BigDecimal => JBigDecimal}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,7 +13,8 @@ import graft.ops._
 /** Run metrics (reference: ProcessingStats + CostEstimate,
   * ondine/core/models.py:72-82,143-355). Cost is exact Decimal, computed
   * from per-call records deduplicated by (attempt, call) — idempotent under
-  * Spark task retry. */
+  * Spark task retry. Calls, tokens and cost cover the invocation pass (on
+  * the durable path, every call in the ledger) plus the auto-retry rounds. */
 final case class RunMetrics(
     rows: Long,
     calls: Long,
@@ -42,10 +42,14 @@ final case class EnrichResult(
   *  - FAST PATH (no runDir, no budget): one narrow pass. Original columns
   *    ride through the Invoke operator, so there is NO merge join, NO
   *    shuffle at all — `_row_index` comes from monotonically_increasing_id
-  *    (per-partition unique; resume determinism not needed here). ONE
-  *    Spark action in the happy path: a single aggregation materializes
-  *    the invocation (persisted) and emits quality counters, the
-  *    auto-retry blank probe, and per-call metrics together.
+  *    (per-partition unique; resume determinism not needed here). A clean
+  *    run is ONE Spark job: the parsed rows (prompt dropped) are written
+  *    into a row checkpoint (`localCheckpoint`), and the quality counters,
+  *    the auto-retry blank probe and the per-call metrics ride the same
+  *    pass as a `Dataset.observe`. The checkpoint cuts the lineage: the
+  *    returned frame reads the checkpointed rows, never the provider, and
+  *    its blocks are released with the frame instead of staying in the
+  *    session's cache.
   *
   *  - DURABLE PATH (runDir set and/or budget capped): driver-chunked loop;
   *    every completed call lands in `runDir/responses` parquet before the
@@ -63,6 +67,7 @@ final class Enricher(
     /** Evidence corpus for spec.evidence — rows (idCol, textCol). */
     evidenceCorpus: Option[DataFrame] = None) {
 
+  import Enricher.{CallTotals, Retried}
   import RowIndex.ColName
 
   /** Render the prompt; with evidence configured, first attach
@@ -94,8 +99,12 @@ final class Enricher(
     val t0 = System.nanoTime()
     spec.validate()
     val attemptSalt = System.currentTimeMillis()
+    // the call pool, limiter and adaptive limiter are keyed on the runId
+    // and shut down when this call ends, so an inline run's id must be
+    // its own: two runs sharing one would lose their pool to each other
     val runId = runDir.map(_.replaceAll("[^A-Za-z0-9]", "_"))
-      .getOrElse(s"inline_$attemptSalt")
+      .getOrElse("inline_" +
+        java.util.UUID.randomUUID().toString.replace("-", ""))
 
     // 1. load-time equality filters (pushed to the scan by Catalyst)
     val filtered = spec.dataset.filters.foldLeft(df) { case (d, (c, v)) =>
@@ -122,6 +131,10 @@ final class Enricher(
     } catch { case e: Throwable =>
       observers.emit(RunFailed(runId, String.valueOf(e.getMessage)))
       throw e
+    } finally {
+      // the result is materialized (checkpoint, ledger or cache), so
+      // reading it never reaches Invoke again: the run's pool can go
+      ClientPool.shutdown(runId)
     }
   }
 
@@ -147,46 +160,42 @@ final class Enricher(
     }
     val formatted = formatWithEvidence(indexed)
     val invoked = Invoke(formatted, client, spec.prompt, spec.llm,
-      spec.processing, runId)
-      .withColumn("_attempt", lit(attemptSalt))
+      spec.processing, runId, attempt = Some(attemptSalt))
 
-    // single persist + ONE aggregation action in the happy path: quality
-    // counters, the auto-retry blank probe, and per-call metrics (via the
-    // head-row-of-call marker `_row_index == _call_id`) all come out of
-    // the same pass that materializes the invocation.
-    val parsed0 = ResponseParser.parse(invoked, spec.output)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val first = col(ColName) === col("_call_id")
-    val callAggs = Seq(
-      sum(when(first, 1L).otherwise(0L)).as("_calls"),
-      sum(when(first, col("tokens_in"))).as("_tin"),
-      sum(when(first, col("tokens_out"))).as("_tout"),
-      sum(when(first, col("cost"))).as("_cost"))
-    val aggCols = qualityAggs ++ callAggs
-    val row0 = parsed0.agg(aggCols.head, aggCols.tail: _*).head()
+    // ONE job materializes the invocation and yields every run metric:
+    // quality counters, the auto-retry blank probe and the per-call
+    // totals (via the head-row-of-call marker `_row_index == _call_id`)
+    // are observed on the rows as they are checkpointed. The prompt is
+    // dropped first; nothing downstream reads it.
+    val (parsed0, row0) = checkpointObserved(
+      ResponseParser.parse(invoked, spec.output).drop("prompt"),
+      qualityAggs ++ callAggs)
 
     // per-call observability on the fast path: same ledger-shaped columns
-    // ride the persisted frame, so the replay reuses the durable path's
+    // ride the checkpointed frame, so the replay reuses the durable path's
     // contract (deterministic ids from (runId, attempt, callId))
     if (observers.wantsCallGrain) replayCallEvents(runId, parsed0)
 
-    val needRetry = spec.processing.autoRetryAttempts > 0 &&
-      lng(row0, "_blank") > 0
-    val parsed1 = if (needRetry) autoRetry(parsed0, formatted, runId)
-      else parsed0
-    val parsed = if (spec.output.mergeStrategy == MergeStrategy.Update)
+    val retried =
+      if (spec.processing.autoRetryAttempts > 0 && lng(row0, "_blank") > 0)
+        Some(autoRetry(parsed0, formatted, runId))
+      else None
+    val parsed1 = retried.fold(parsed0)(_.data)
+    val update = spec.output.mergeStrategy == MergeStrategy.Update
+    val parsed = if (update)
       overlap.foldLeft(parsed1)((d, c) =>
         d.withColumn(c, coalesce(col(c), col(s"_old_$c"))).drop(s"_old_$c"))
     else parsed1
-    // post-retry quality differs from row0 only if a retry actually ran
-    val qrow = if (needRetry ||
-        spec.output.mergeStrategy == MergeStrategy.Update)
-      parsed.agg(qualityAggs.head, qualityAggs.tail: _*).head()
-    else row0
+    // quality describes the returned rows: after the retry's merge, and
+    // after UPDATE's coalesce with the originals
+    val qrow =
+      if (update) parsed.agg(qualityAggs.head, qualityAggs.tail: _*).head()
+      else retried.fold(row0)(_.quality)
 
     val data = parsed.drop(internalCols: _*)
     val finalData = if (addedIndex) data.drop(ColName) else data
-    assemble(finalData, qrow, row0, t0)
+    assemble(finalData, qrow,
+      callTotals(row0) + retried.fold(CallTotals.Zero)(_.calls), t0)
   }
 
   // --- durable / budgeted path -----------------------------------------
@@ -209,8 +218,8 @@ final class Enricher(
     val formatted = indexed.select(col(ColName), col("prompt"))
 
     def invokeRows(rows: DataFrame): DataFrame =
-      Invoke(rows, client, spec.prompt, spec.llm, spec.processing, runId)
-        .withColumn("_attempt", lit(attemptSalt))
+      Invoke(rows, client, spec.prompt, spec.llm, spec.processing, runId,
+        attempt = Some(attemptSalt))
 
     val ledgerDir = runDir.map(_ + "/responses")
     val hConf = spark.sessionState.newHadoopConf()
@@ -499,20 +508,18 @@ final class Enricher(
     // now instead of carrying two copies of the run to the session's end
     invoked.unpersist(blocking = false)
 
-    val needRetry = spec.processing.autoRetryAttempts > 0 &&
-      lng(row0, "_blank") > 0
-    val parsed = if (needRetry) autoRetry(parsed0, formatted, runId)
-      else parsed0
-    val qrow = if (needRetry)
-      parsed.agg(qualityAggs.head, qualityAggs.tail: _*).head()
-    else row0
+    val retried =
+      if (spec.processing.autoRetryAttempts > 0 && lng(row0, "_blank") > 0)
+        Some(autoRetry(parsed0, formatted, runId))
+      else None
 
     // merge result columns back into the original table
     val outs = spec.output.outputColumns
-    val merged = ResultMerger.merge(indexed.drop("prompt"), parsed, outs,
-      spec.output.mergeStrategy)
+    val merged = ResultMerger.merge(indexed.drop("prompt"),
+      retried.fold(parsed0)(_.data), outs, spec.output.mergeStrategy)
     val finalData = if (addedIndex) merged.drop(ColName) else merged
-    assemble(finalData, qrow, row0, t0)
+    assemble(finalData, retried.fold(row0)(_.quality),
+      callTotals(row0) + retried.fold(CallTotals.Zero)(_.calls), t0)
   }
 
   // --- shared tail ------------------------------------------------------
@@ -527,42 +534,89 @@ final class Enricher(
 
   /** Auto-retry rows whose outputs all came back null/blank (reference:
     * ondine/api/pipeline.py:1741-1879; skipped rows carry the sentinel and
-    * are NOT retried). Callers invoke this only when the aggregation pass
-    * saw at least one blank row, so the first iteration skips the probe. */
+    * are NOT retried). Callers invoke this only when the first pass saw at
+    * least one blank row. Each round checkpoints the re-invoked rows (the
+    * retry calls' totals observed in the same job) and then the merged
+    * frame (its quality counters, the next round's blank probe, observed
+    * in that job). */
   private def autoRetry(parsed0: DataFrame, formatted: DataFrame,
-                        runId: String): DataFrame = {
-    var parsed = parsed0
+                        runId: String): Retried = {
     val outs = spec.output.outputColumns
+    val keepCols = parsed0.columns.toSeq.map(col)
     val allBlank = allBlankExpr
+    var parsed = parsed0
+    var quality: Row = null
+    var calls = CallTotals.Zero
     var attempt = 0
-    var mayHaveBlanks = true
-    while (attempt < spec.processing.autoRetryAttempts && mayHaveBlanks) {
+    var blanks = 1L
+    while (attempt < spec.processing.autoRetryAttempts && blanks > 0) {
       val failedIdx = parsed.filter(allBlank).select(ColName)
       val redo = Invoke(
         formatted.join(failedIdx, Seq(ColName), "left_semi"),
         client, spec.prompt, spec.llm, spec.processing, runId)
-        .withColumn("_attempt", lit(System.currentTimeMillis()))
-      val redoParsed = ResponseParser.parse(redo, spec.output)
-        .select((ColName +: outs).map(col): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      redoParsed.count()
-      val keepCols = parsed.columns.toSeq
-      val renamed = outs.foldLeft(redoParsed)((d, c) =>
+      val (redoParsed, redoCalls) = checkpointObserved(
+        ResponseParser.parse(redo, spec.output), callAggs)
+      calls += callTotals(redoCalls)
+      val redoOuts = redoParsed.select((ColName +: outs).map(col): _*)
+      val renamed = outs.foldLeft(redoOuts)((d, c) =>
         d.withColumnRenamed(c, s"_r_$c"))
-      parsed = parsed.join(renamed, Seq(ColName), "left")
+      var joined = parsed.join(renamed, Seq(ColName), "left")
       for (c <- outs)
-        parsed = parsed.withColumn(c,
+        joined = joined.withColumn(c,
           when(col(c).isNull || trim(col(c).cast("string")) === "",
             col(s"_r_$c"))
             .otherwise(col(c))).drop(s"_r_$c")
-      parsed = parsed.select(keepCols.map(col): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val (next, q) = checkpointObserved(joined.select(keepCols: _*),
+        qualityAggs)
+      parsed = next
+      quality = q
+      blanks = lng(q, "_blank")
       attempt += 1
-      // probe only if another iteration is allowed
-      mayHaveBlanks = attempt < spec.processing.autoRetryAttempts &&
-        !parsed.filter(allBlank).isEmpty
     }
-    parsed
+    Retried(parsed, quality, calls)
+  }
+
+  /** Per-call totals, counted once per call through the head-row-of-call
+    * marker `_row_index == _call_id` (exact when every row of the frame
+    * comes from one invocation). */
+  private def callAggs: Seq[Column] = {
+    val first = col(ColName) === col("_call_id")
+    Seq(
+      sum(when(first, 1L).otherwise(0L)).as("_calls"),
+      sum(when(first, col("tokens_in"))).as("_tin"),
+      sum(when(first, col("tokens_out"))).as("_tout"),
+      sum(when(first, col("cost"))).as("_cost"))
+  }
+
+  /** Materialize `df` as a local checkpoint in ONE job that also computes
+    * `aggs` over its rows, and return both. The
+    * observed row is read from the plan's collected metrics as soon as
+    * the eager checkpoint returns, on this thread; an `Observation` would
+    * have to be awaited, and its future is completed from the listener
+    * bus.
+    *
+    * The checkpoint cuts the lineage. Re-reading the result therefore
+    * never calls the provider again. If an executor holding checkpoint
+    * blocks is lost, the read fails with an error instead of quietly
+    * paying for the calls a second time.
+    *
+    * The metrics are exact because the checkpoint job ends in one result
+    * stage holding Invoke, parse and the observation, and Spark merges a
+    * result task's accumulator updates once per partition, whatever task
+    * attempts or speculative copies ran. No shuffle may ever sit between
+    * Invoke and `observe`: it would move the invocation into a map stage,
+    * which a lost shuffle block re-runs, paying calls the observation
+    * counts once, or the observation itself, whose accumulator updates a
+    * re-run map stage merges again. */
+  private def checkpointObserved(df: DataFrame,
+                                 aggs: Seq[Column]): (DataFrame, Row) = {
+    val observed = df.observe(Enricher.ObservedName, aggs.head, aggs.tail: _*)
+    val materialized =
+      observed.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
+    val row = observed.queryExecution.observedMetrics.getOrElse(
+      Enricher.ObservedName, throw new IllegalStateException(
+        "checkpoint job finished without its observed run metrics"))
+    (materialized, row)
   }
 
   /** Quality counters + the auto-retry blank probe as aggregation columns
@@ -583,15 +637,21 @@ final class Enricher(
 
   /** Null-safe long by field name (aggregates over an empty frame sum to
     * null). */
-  private def lng(r: org.apache.spark.sql.Row, name: String): Long = {
+  private def lng(r: Row, name: String): Long = {
     val i = r.fieldIndex(name)
     if (r.isNullAt(i)) 0L else r.getLong(i)
   }
 
-  /** Build the result from the quality row (post-retry) and the call row
-    * (first-pass calls: fields _calls/_tin/_tout/_cost). */
-  private def assemble(finalData: DataFrame, qrow: org.apache.spark.sql.Row,
-                       callRow: org.apache.spark.sql.Row,
+  /** Call totals from an aggregate row with fields _calls/_tin/_tout/_cost. */
+  private def callTotals(r: Row): CallTotals = {
+    val costAt = r.fieldIndex("_cost")
+    CallTotals(lng(r, "_calls"), lng(r, "_tin"), lng(r, "_tout"),
+      if (r.isNullAt(costAt)) JBigDecimal.ZERO else r.getDecimal(costAt))
+  }
+
+  /** Build the result from the quality row (post-retry) and the run's
+    * call totals (first pass plus auto-retry rounds). */
+  private def assemble(finalData: DataFrame, qrow: Row, calls: CallTotals,
                        t0: Long): EnrichResult = {
     val outs = spec.output.outputColumns
     val totalRows = lng(qrow, "_total")
@@ -600,14 +660,12 @@ final class Enricher(
     val rate = if (totalRows == 0) 0.0 else valid.toDouble / totalRows
     val q = QualityReport(totalRows, valid, perCol, rate,
       Quality.rating(rate))
-    val costAt = callRow.fieldIndex("_cost")
     val metrics = RunMetrics(
       rows = totalRows,
-      calls = lng(callRow, "_calls"),
-      tokensIn = lng(callRow, "_tin"),
-      tokensOut = lng(callRow, "_tout"),
-      cost = if (callRow.isNullAt(costAt)) JBigDecimal.ZERO
-        else callRow.getDecimal(costAt),
+      calls = calls.calls,
+      tokensIn = calls.tokensIn,
+      tokensOut = calls.tokensOut,
+      cost = calls.cost,
       skippedRows = lng(qrow, "_skipped"),
       durationMs = (System.nanoTime() - t0) / 1000000L)
     Quality.noOutputGuard(q, metrics.skippedRows,
@@ -663,6 +721,24 @@ final class Enricher(
   * parser = json iff multi-column).
   */
 object Enricher {
+  /** Name of the run-metrics observation on a checkpoint job. */
+  private val ObservedName = "graft_enrich_metrics"
+
+  /** Provider calls and what they cost, summed over a run. */
+  private final case class CallTotals(calls: Long, tokensIn: Long,
+                                      tokensOut: Long, cost: JBigDecimal) {
+    def +(o: CallTotals): CallTotals = CallTotals(calls + o.calls,
+      tokensIn + o.tokensIn, tokensOut + o.tokensOut, cost.add(o.cost))
+  }
+  private object CallTotals {
+    val Zero = CallTotals(0L, 0L, 0L, JBigDecimal.ZERO)
+  }
+
+  /** What the auto-retry loop hands back: the merged rows, their quality
+    * counters, and the totals of the retry calls it made. */
+  private final case class Retried(data: DataFrame, quality: Row,
+                                   calls: CallTotals)
+
   def enrich(df: DataFrame,
              template: String,
              outputColumns: Seq[String],

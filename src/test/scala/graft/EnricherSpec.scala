@@ -435,4 +435,137 @@ class EnricherSpec extends SparkSpec {
     assert(ClientPool.pool(id, 2) ne null) // fresh after sweep, no throw
     ClientPool.shutdown(id)
   }
+
+  // --- fast path: one checkpoint, metrics observed on the same pass ------
+
+  private def oneSlice(texts: Seq[String]) =
+    spark.sparkContext.parallelize(texts, 1).toDF("text")
+
+  private def spec(template: String, batch: Int,
+                   llm: LlmSpec = LlmSpec(),
+                   proc: ProcessingSpec = ProcessingSpec()) = PipelineSpec(
+    dataset = DatasetSpec(Seq("text")),
+    prompt = PromptSpec(template, batchSize = batch),
+    llm = llm, processing = proc,
+    output = OutputSpec(Seq("out")))
+
+  test("fast path: reading the result again never calls the provider") {
+    val n = 95
+    val batch = 10
+    val key = s"reread-${System.nanoTime()}"
+    val df = oneSlice((0 until n).map(i => s"reread $i"))
+    val r = new Enricher(spec("RR:{text}", batch),
+      new CountingClient(key, new MockLlmClient())).enrich(df)
+    assert(r.data.collect().length == n)
+    assert(r.data.count() == n)
+    val calls = CountingClient.of(key).calls.get()
+    assert(calls == (n + batch - 1) / batch,
+      s"want ceil($n/$batch) provider calls in total, got $calls")
+  }
+
+  test("fast path leaves nothing in the session's cache") {
+    spark.catalog.clearCache()
+    val df = (0 until 60).map(i => s"cache $i").toDF("text")
+    val r = Enricher.enrich(df, "CM:{text}", Seq("out"), new MockLlmClient(),
+      batchSize = 8)
+    assert(r.data.count() == 60)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cache.isEmpty, "fast-path enrich left cached frames behind")
+  }
+
+  test("run metrics and quality equal the provider's totals") {
+    def check(label: String, template: String, texts: Seq[String],
+              sp: PipelineSpec, inner: graft.llm.LlmClient,
+              firstPassCalls: Long, retried: Boolean): Unit = {
+      val key = s"totals-$label-${System.nanoTime()}"
+      val r = new Enricher(sp, new CountingClient(key, inner))
+        .enrich(oneSlice(texts))
+      val t = CountingClient.of(key)
+      val m = r.metrics
+      assert(if (retried) t.calls.get() > firstPassCalls
+        else t.calls.get() == firstPassCalls,
+        s"$label: ${t.calls.get()} provider calls, $firstPassCalls on the first pass")
+      assert(m.calls == t.calls.get(), s"$label: calls")
+      assert(m.tokensIn == t.tokensIn.get(), s"$label: tokens in")
+      assert(m.tokensOut == t.tokensOut.get(), s"$label: tokens out")
+      assert(m.cost.compareTo(t.cost.get()) == 0,
+        s"$label: cost ${m.cost} vs ${t.cost.get()}")
+      assert(m.rows == texts.size, s"$label: rows")
+      val outs = r.data.select("text", "out").as[(String, String)].collect()
+      val skipped = outs.count(_._2 == Sentinels.SkippedOutput)
+      val valid = outs.count { case (tx, o) =>
+        o == MockLlmClient.md5Hex(template.replace("{text}", tx)) }
+      assert(m.skippedRows == skipped, s"$label: skipped rows")
+      assert(r.quality.totalRows == texts.size, s"$label: total rows")
+      assert(r.quality.validRows == valid, s"$label: valid rows")
+      assert(valid + skipped == texts.size, s"$label: unaccounted rows")
+    }
+    val texts = (0 until 120).map(i => s"totals row $i ${System.nanoTime()}")
+    check("clean", "T:{text}", texts, spec("T:{text}", 10),
+      new MockLlmClient(), firstPassCalls = 12, retried = false)
+    // batch 1 and no retries: every failed call is one skipped row
+    check("skip", "T:{text}", texts.take(30),
+      spec("T:{text}", 1, LlmSpec(maxRetries = 0, concurrency = 1),
+        ProcessingSpec(errorPolicy = ErrorPolicy.Skip)),
+      new MockLlmClient(failEveryN = 4), firstPassCalls = 30, retried = false)
+    // every 4th item of a batch is dropped on the batch's first sight, so
+    // each retry round drops some again (24, 5, 1 rows); four rounds heal
+    // all, and their calls count toward the run. The template is new
+    // because the clean run above has seen its batches.
+    check("autoretry", "A:{text}", texts, spec("A:{text}", 10,
+      proc = ProcessingSpec(autoRetryAttempts = 4)),
+      new MockLlmClient(dropEveryNthBatchItem = 4), firstPassCalls = 12,
+      retried = true)
+  }
+
+  test("enrich shuts its call pool down when it returns") {
+    val obs = new graft.run.CollectingObserver
+    val r = new Enricher(spec("PL:{text}", 5), new MockLlmClient(),
+      observers = new graft.run.ObserverDispatcher().register(obs))
+      .enrich((0 until 40).map(i => s"pool $i").toDF("text"))
+    assert(r.data.count() == 40)
+    val runId = obs.events.toArray.collectFirst {
+      case graft.run.RunStarted(id, _) => id
+    }.get
+    val name = s"graft-invoke-$runId"
+    def alive = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.getName == name && t.isAlive)
+    }
+    val deadline = System.nanoTime() + 5L * 1000000000L
+    while (alive && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(!alive, s"$name threads still alive 5 s after enrich returned")
+  }
+}
+
+/** Wraps a client and counts, per key, every provider call it passes on
+  * with its tokens and cost (a call that throws counts as a call). Totals
+  * live in the companion: the client is serialized into each task. */
+final class CountingClient(key: String, inner: graft.llm.LlmClient)
+    extends graft.llm.LlmClient {
+  def model: String = inner.model
+  def invoke(prompt: String, systemMessage: Option[String]): graft.llm.LlmResponse = {
+    val t = CountingClient.of(key)
+    t.calls.incrementAndGet()
+    val r = inner.invoke(prompt, systemMessage)
+    t.tokensIn.addAndGet(r.tokensIn)
+    t.tokensOut.addAndGet(r.tokensOut)
+    t.cost.accumulateAndGet(r.cost, _ add _)
+    r
+  }
+}
+
+object CountingClient {
+  final class Totals {
+    val calls = new java.util.concurrent.atomic.AtomicLong
+    val tokensIn = new java.util.concurrent.atomic.AtomicLong
+    val tokensOut = new java.util.concurrent.atomic.AtomicLong
+    val cost = new java.util.concurrent.atomic.AtomicReference(
+      java.math.BigDecimal.ZERO)
+  }
+  private val totals =
+    new java.util.concurrent.ConcurrentHashMap[String, Totals]()
+  def of(key: String): Totals = totals.computeIfAbsent(key, _ => new Totals)
 }

@@ -72,6 +72,50 @@ class PlanSpec extends SparkSpec {
       s"fast-path enrichment must not shuffle:\n$p")
   }
 
+  test("clean fast-path enrich runs one Spark job and writes no shuffle") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"plan-one-job-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull
+        if (g == group) {
+          jobs.add(e.jobId)
+          e.stageInfos.foreach(si => stages.add(si.stageId))
+        }
+        if (g == marker) markerSeen.countDown()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId) &&
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleStages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val df = (0 until 200).map(i => s"j$i").toDF("text")
+      sc.setJobGroup(group, "fast-path enrich")
+      val r = try Enricher.enrich(df, "J:{text}", Seq("out"),
+        new MockLlmClient(), batchSize = 10)
+      finally sc.clearJobGroup()
+      assert(r.metrics.rows == 200 && r.metrics.calls > 0)
+      // the listener bus is ordered: once a later job's start arrives,
+      // every event of the enrich's jobs has been delivered
+      sc.setJobGroup(marker, "listener barrier")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.size == 1, s"want one job, ran ${jobs.size}")
+      assert(stages.size == 1, s"want one stage, planned ${stages.size}")
+      assert(shuffleStages.get == 0,
+        s"${shuffleStages.get} stage(s) wrote shuffle output")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("whole-stage codegen covers the aggregation pipeline") {
     // note: lambda-based array expressions (q30 etc.) are codegen-fallback
     // by design in Spark; the scan->agg pipeline must codegen.
